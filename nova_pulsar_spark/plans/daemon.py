@@ -21,6 +21,7 @@ or an external scheduler; `--once` ≡ calling them directly.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from datetime import datetime, timezone
@@ -94,44 +95,53 @@ PLAN_SCHEMA = T.StructType(
 )
 
 
-def _read_plans(spark: SparkSession, root: str, state_glob: str, status: str):
-    """Read every project's `{state}` dir as one DataFrame with the
-    plan's queue state derived from its path (S1/P8).
+def _read_json(spark: SparkSession, dirs: list[str], schema: T.StructType, **options):
+    """The ``*.json`` files of ``dirs`` as one DataFrame, from one
+    listing and one read, in at most ``defaultParallelism`` partitions;
+    None when no directory exists.
 
-    Only the nothing-matches-the-glob case (AnalysisException) maps to
-    None (= no plans in this state yet). Corrupt plan files raise —
-    FAILFAST, mirroring `plans/pulsar._read_queue`: a PERMISSIVE read
-    would hand the Orbiter an all-null plan row instead of failing."""
-    path = os.path.join(root, "*", state_glob)
-    from pyspark.errors import AnalysisException
+    Directories, not a file glob: Spark lists a glob that expands to
+    more than 32 files in a distributed job with a task per file,
+    while a few directories are listed on the driver. The cap keeps a
+    long history of sub-KB files (Spark packs about 32 per partition
+    past 128 files) from adding tasks to every later stage."""
+    if not dirs:
+        return None
+    df = spark.read.schema(schema).option("pathGlobFilter", "*.json").options(**options).json(dirs)
+    return df.coalesce(spark.sparkContext.defaultParallelism)
 
-    try:
-        df = (
-            spark.read.schema(PLAN_SCHEMA)
-            .option("pathGlobFilter", "*.json")
-            .option("mode", "FAILFAST")
-            .json(path)
-        )
-        if not df.take(1):  # stays in the DataFrame/codegen path (no RDD conversion)
-            return None
-        return df.withColumn("status", F.lit(status))
-    except AnalysisException:
-        return None  # no files yet for this state (path not found)
+
+def _plan_status():
+    """A plan's queue state from its path: the directory right under
+    its project, matched from the END of the path so that project or
+    root directory names (a project called ``active``, a root under
+    ``completed/``) never decide it."""
+    seg = F.split(F.col("_metadata.file_path"), "/")
+    state, parent = F.element_at(seg, -2), F.element_at(seg, -3)
+    return (
+        F.when((state == "background") & (parent == "queued"), "queued")
+        .when(state == "active", "active")
+        .when(state == "completed", "completed")
+    )
 
 
 def scan_namespaces(spark: SparkSession, root: str):
-    parts = [
-        _read_plans(spark, root, "queued/background/*.json", "queued"),
-        _read_plans(spark, root, "active/*.json", "active"),
-        _read_plans(spark, root, "completed/*.json", "completed"),
-    ]
-    parts = [p for p in parts if p is not None]
-    if not parts:
+    """Every project's queued (background), active and completed plans
+    as one DataFrame with a ``status`` column (S1/P8), from one read
+    over the state directories that exist; None when none exists.
+
+    Corrupt plan files raise when the frame is evaluated — FAILFAST,
+    mirroring `plans/pulsar._read_queue`: a PERMISSIVE read would hand
+    the Orbiter an all-null plan row instead of failing."""
+    dirs = sorted(
+        d
+        for sub in ("queued/background", "active", "completed")
+        for d in glob.glob(os.path.join(glob.escape(root), "*", sub))
+    )
+    plans = _read_json(spark, dirs, PLAN_SCHEMA, mode="FAILFAST")
+    if plans is None:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return plans.withColumn("status", _plan_status())
 
 
 def dispatch_once(
@@ -181,15 +191,21 @@ def dispatch_once(
     accumulate, and a recycled OS pid can never make a long-finished
     plan look in-flight.
 
+    Cycle shape: one file listing (`scan_namespaces` reads the
+    queued, active and completed dirs in one read), one materialized
+    plan table (cached by the single counts aggregate), one dependency
+    self-join (`scheduler.dependency_flags` behind the selection).
+
     The scan cache is released and the cycle is logged even when the
     scan or the handoff raises — an unreadable queue must not leak
     cached state or leave the cycle invisible in the daemon log. A
-    scan-stage failure (e.g. a corrupt plan file surfacing at the
-    lazily-evaluated count, past `_read_plans`' take(1)) is logged as
-    ``scan_error`` with the exception string, never as a normal idle
-    cycle; FAILFAST means one corrupt plan file halts dispatch for
-    every project until it is repaired or removed — deliberate, the
-    same all-stop the reference's `set -e` would produce."""
+    scan-stage failure (e.g. a corrupt plan file in any of the three
+    states surfacing at the counts aggregate, which parses every plan
+    file) is logged as ``scan_error`` with the exception string, never
+    as a normal idle cycle; FAILFAST means one corrupt plan file halts
+    dispatch for every project until it is repaired or removed —
+    deliberate, the same all-stop the reference's `set -e` would
+    produce."""
     now = now or _utcnow()
     if pid_alive is None:
         pid_alive = pid_alive_probe
@@ -199,9 +215,17 @@ def dispatch_once(
         plans = scan_namespaces(spark, root)
         if plans is None:
             return decision
+        # The one materialized plan table: the counts below scan it into
+        # the cache, and the selection reads it from there.
         plans = plans.cache()
-        n_queued = plans.filter(F.col("status") == "queued").count()
-        n_active = plans.filter(F.col("status") == "active").count()
+        counts = plans.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("status") == "queued", 1)).alias("n_queued"),
+            F.count(F.when(F.col("status") == "active", 1)).alias("n_active"),
+        ).first()
+        if counts.n == 0:
+            return decision  # state dirs exist but hold no plan file yet
+        n_queued, n_active = counts.n_queued, counts.n_active
         decision.update({"n_queued": n_queued, "n_active": n_active})
         in_flight: set[str] = set()
         if handoff is not None and n_queued > 0:
@@ -306,8 +330,9 @@ def dispatch_stream(
         .option("pathGlobFilter", "*.json")
         .json(os.path.join(root, "*", "queued", "background"))
     )
-    active = _read_plans(spark, root, "active/*.json", "active")
-    if active is not None:
+    plans = scan_namespaces(spark, root)
+    if plans is not None:
+        active = plans.filter(F.col("status") == "active")
         # the stream-static guard join: static side re-planned per batch
         guarded = stream.join(active.select("project").distinct(), "project", "left_anti")
     else:
@@ -354,10 +379,10 @@ def monitor_once(
     """One watcher cycle: status scan → pulse.json + incidents."""
     from nova_pulsar_spark.streaming.topics import STATUS_SCHEMA
 
-    status_glob = os.path.join(root, "*", "status", "*.json")
+    status_dirs = sorted(glob.glob(os.path.join(glob.escape(root), "*", "status")))
     try:
-        se = spark.read.schema(STATUS_SCHEMA).json(status_glob)
-        empty = not se.take(1)
+        se = _read_json(spark, status_dirs, STATUS_SCHEMA)
+        empty = se is None or not se.take(1)
     except Exception:
         empty = True
     if empty:

@@ -63,72 +63,95 @@ def dep_edges(plans: DataFrame, phases: DataFrame) -> DataFrame:
     )
 
 
-def dep_satisfied(plans: DataFrame, phases: DataFrame) -> DataFrame:
-    """Queued plans whose every dependency is completed (P1).
+def dependency_flags(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Per-plan dependency flags from ONE file self-join and ONE per-plan
+    aggregate — the whole dependency picture the Orbiter needs
+    (`agents/orbiter.md:57-62,68-83`), with the edge semantics of
+    :func:`dep_edges` (B depends on A iff their file sets overlap and A
+    was created first):
 
-    eligible = queued ANTI-JOIN (edges whose dep is not completed).
+    - ``blocked``: an older plan sharing a file is not completed;
+    - ``unblocks``: a newer plan shares a file;
+    - ``critical``: the plan touches a critical file (auth/security/pay).
+
+    Each (plan, file) row ``a`` is joined to every row ``b`` touching
+    the same file, itself included, so a plan with a file always keeps
+    a row and the join stays inner; the flags skip the self pairs.
+    Flags are ORs over rows, so repeated files need no ``distinct``.
+    Plans without files have no row. Plan ids are unique (one plan file
+    per id).
     """
-    edges = dep_edges(plans, phases)
-    blocking = edges.join(
-        plans.filter(F.col("status") != "completed").select(F.col("id").alias("dep_id")),
-        "dep_id",
-    ).select("plan_id").distinct()
-    return plans.filter(F.col("status") == "queued").join(
-        blocking, plans.id == blocking.plan_id, "left_anti"
+    files = phases.select("plan_id", F.explode("files").alias("file")).join(
+        plans.select(F.col("id").alias("plan_id"), "created_at", "status"), "plan_id"
+    )
+    pairs = files.alias("a").join(files.alias("b"), F.col("a.file") == F.col("b.file"))
+    # Expression strings keep the per-cycle driver→JVM call count low.
+    older = "a.plan_id <> b.plan_id AND b.created_at < a.created_at"
+    newer = "a.plan_id <> b.plan_id AND a.created_at < b.created_at"
+    return pairs.groupBy(F.col("a.plan_id").alias("id")).agg(
+        F.expr(f"bool_or(coalesce({older} AND b.status <> 'completed', false))").alias("blocked"),
+        F.expr(f"bool_or(coalesce({newer}, false))").alias("unblocks"),
+        F.expr(f"bool_or(a.file RLIKE '{CRITICAL_FILE_RE}')").alias("critical"),
+    )
+
+
+def _flagged_queued(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Queued plans with their :func:`dependency_flags` (False for a
+    plan without files)."""
+    queued = plans.filter(F.col("status") == "queued")
+    return queued.join(dependency_flags(plans, phases), "id", "left").fillna(
+        False, ["blocked", "unblocks", "critical"]
+    )
+
+
+def dep_satisfied(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Queued plans whose every dependency is completed (P1): the
+    queued plans not ``blocked``."""
+    return _flagged_queued(plans, phases).filter(~F.col("blocked")).select(plans.columns)
+
+
+# Priority (P9, `agents/orbiter.md:68-83`): base(type) − 1 if the plan
+# unblocks others − 1 if it waited longest among queued − 1 if it
+# touches critical files (auth/security/payments, orbiter.md:82) + 1 if
+# large (≥4 phases).
+_PRIORITY_SQL = (
+    "CAST(CASE `type` "
+    + " ".join(f"WHEN '{t}' THEN {p}" for t, p in TYPE_PRIORITY.items())
+    + " ELSE 5 END"
+    " - CAST(unblocks AS INT)"
+    " - CASE WHEN created_at = oldest_created THEN 1 ELSE 0 END"
+    " - CAST(critical AS INT)"
+    " + CASE WHEN n_phases >= 4 THEN 1 ELSE 0 END AS INT)"
+)
+
+
+def _scored(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Every queued plan's priority, with its ``blocked`` flag."""
+    waited = plans.filter(F.col("status") == "queued").select(
+        F.min("created_at").alias("oldest_created")
+    )
+    return (
+        _flagged_queued(plans, phases)
+        .crossJoin(waited)
+        .select("id", "project", "type", "created_at", F.expr(_PRIORITY_SQL).alias("priority"), "blocked")
     )
 
 
 def priority_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
-    """Priority projection (P9, `agents/orbiter.md:68-83`).
+    """Priority projection (P9) of every queued plan, blocked or not."""
+    return _scored(plans, phases).drop("blocked")
 
-    base(type) − 1 if the plan unblocks others − 1 if it waited
-    longest among queued − 1 if it touches critical files
-    (auth/security/payments, orbiter.md:82) + 1 if large (≥4 phases).
-    """
-    base = F.coalesce(
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in TYPE_PRIORITY.items() for x in kv]),
-            F.col("type"),
-        ),
-        F.lit(5),
-    )
-    edges = dep_edges(plans, phases)
-    unblocks = edges.select(F.col("dep_id").alias("id")).distinct().withColumn("unblocks", F.lit(1))
-    critical = (
-        plan_files(phases)
-        .filter(F.col("file").rlike(CRITICAL_FILE_RE))
-        .select(F.col("plan_id").alias("id"))
-        .distinct()
-        .withColumn("critical", F.lit(1))
-    )
-    queued = plans.filter(F.col("status") == "queued")
-    waited = queued.select(F.min("created_at").alias("oldest_created"))
-    return (
-        queued.join(unblocks, "id", "left")
-        .join(critical, "id", "left")
-        .crossJoin(waited)
-        .select(
-            "id",
-            "project",
-            "type",
-            "created_at",
-            (
-                base
-                - F.coalesce(F.col("unblocks"), F.lit(0))
-                - F.when(F.col("created_at") == F.col("oldest_created"), 1).otherwise(0)
-                - F.coalesce(F.col("critical"), F.lit(0))
-                + F.when(F.col("n_phases") >= 4, 1).otherwise(0)
-            ).cast("int").alias("priority"),
-        )
-    )
+
+def _eligible_scores(plans: DataFrame, phases: DataFrame) -> DataFrame:
+    """Priority of the dependency-satisfied queued plans — the frame
+    the Orbiter orders."""
+    return _scored(plans, phases).filter(~F.col("blocked")).drop("blocked")
 
 
 def best_plan(plans: DataFrame, phases: DataFrame) -> DataFrame:
     """Top-1 dispatch choice (O1, `agents/orbiter.md:85-89`): among
     dependency-satisfied queued plans, lowest priority then oldest."""
-    eligible = dep_satisfied(plans, phases).select("id")
-    scored = priority_scores(plans, phases).join(eligible, "id")
-    return scored.orderBy("priority", "created_at", "id").limit(1)
+    return _eligible_scores(plans, phases).orderBy("priority", "created_at", "id").limit(1)
 
 
 # --- S11/L1: the external-LLM scorer seam --------------------------------
@@ -176,26 +199,33 @@ def select_plan(plans: DataFrame, phases: DataFrame, scorer=None) -> DataFrame:
     """
     if scorer is None:
         return best_plan(plans, phases)
-    eligible = dep_satisfied(plans, phases).select("id")
-    scored = priority_scores(plans, phases).join(eligible, "id")
-    finalists = scored.orderBy("priority", "created_at", "id").limit(SCORER_CANDIDATES)
+    scored = _eligible_scores(plans, phases)
+    finalists = scored.orderBy("priority", "created_at", "id").limit(SCORER_CANDIDATES).collect()
+    # The answer is one of the collected finalists and goes back as a
+    # local frame: neither the scorer's pick nor a fallback re-runs the
+    # dependency graph.
+    return scored.sparkSession.createDataFrame(_scorer_pick(finalists, scorer), scored.schema)
+
+
+def _scorer_pick(finalists: list, scorer) -> list:
+    """The scorer's validated choice among ``finalists`` (ordered, so
+    the first is the O1 top-1), as a list of at most one row."""
+    if not finalists:
+        return []
     candidates = [
         {k: (v.isoformat() if hasattr(v, "isoformat") else v) for k, v in r.asDict().items()}
-        for r in finalists.collect()
+        for r in finalists
     ]
-    if not candidates:
-        return best_plan(plans, phases)
     try:
         reply = scorer(candidates)
     except Exception:
-        return best_plan(plans, phases)  # scorer crash → deterministic
+        return finalists[:1]  # scorer crash → deterministic
     m = DISPATCH_RE.match((reply or "").strip())
     if m is None:
-        return best_plan(plans, phases)  # malformed reply → deterministic
-    project, plan_id = m.group(1), m.group(2)
-    if not any(c["project"] == project and c["id"] == plan_id for c in candidates):
-        return best_plan(plans, phases)  # nonexistent plan → deterministic
-    return scored.filter((F.col("project") == project) & (F.col("id") == plan_id)).limit(1)
+        return finalists[:1]  # malformed reply → deterministic
+    project, plan_id = m.groups()
+    chosen = [r for r in finalists if r.project == project and r.id == plan_id]
+    return chosen[:1] or finalists[:1]  # nonexistent plan → deterministic
 
 
 def subprocess_scorer(argv: list[str], timeout: float = 30.0):

@@ -7,6 +7,8 @@ import json
 import os
 from datetime import datetime
 
+import pytest
+
 from nova_pulsar_spark.plans.daemon import dispatch_once, monitor_once
 from nova_pulsar_spark.streaming.topics import QueueNamespace, atomic_write_json
 
@@ -320,6 +322,57 @@ def test_corrupt_scan_logs_scan_error_not_idle(spark, tmp_path):
     _setup_queues(root)
     bad = os.path.join(root, "alpha", "queued", "background", "zz-corrupt.json")
     with open(bad, "w") as f:
+        f.write('{"id": "broken", ')  # truncated JSON
+    with pytest.raises(Exception):
+        dispatch_once(spark, root, NOW)
+    last = open(os.path.join(root, "daemon.log")).read().strip().splitlines()[-1]
+    rec = json.loads(last.split(" - ", 1)[1])
+    assert rec["action"] == "scan_error"
+    assert rec["error"]
+
+
+def test_status_comes_from_the_state_dir_not_a_path_substring(spark, tmp_path):
+    """A plan's state is the directory right under its project, read
+    from the end of the path: projects named `active` and `completed`,
+    under a queue root that itself sits in a `completed` directory,
+    keep their queued, completed and active plans apart."""
+    root = str(tmp_path / "completed" / "comms")
+    act = QueueNamespace(root=root, project="active")
+    done = QueueNamespace(root=root, project="completed")
+    act.setup()
+    done.setup()
+    # project `active`: a finished plan and a queued follow-up on its file
+    act.enqueue_plan(_plan("plan-a0", "active", "feature", "2026-02-25T09:00:00", [["x.py"]]))
+    act.move_plan("plan-a0", "queued_background", "completed")
+    act.enqueue_plan(_plan("plan-a1", "active", "feature", "2026-02-27T09:00:00", [["x.py"]]))
+    # project `completed`: the oldest queued bug → priority 1, the pick
+    done.enqueue_plan(_plan("plan-c1", "completed", "bug", "2026-02-26T09:00:00", [["y.py"]]))
+
+    d = dispatch_once(spark, root, NOW)
+    assert (d["action"], d["project"], d["plan_id"]) == ("dispatch", "completed", "plan-c1")
+    assert (d["n_queued"], d["n_active"]) == (2, 0)
+    assert os.path.exists(os.path.join(root, "completed", "active", "plan-c1.json"))
+    # the dispatched plan now sits in project `completed`'s active dir
+    d2 = dispatch_once(spark, root, NOW)
+    assert (d2["action"], d2["n_queued"], d2["n_active"]) == ("wait", 1, 1)
+    logged = [
+        json.loads(line.split(" - ", 1)[1])
+        for line in open(os.path.join(root, "daemon.log")).read().splitlines()
+    ]
+    assert [(r["action"], r["n_queued"], r["n_active"]) for r in logged] == [
+        ("dispatch", 2, 0),
+        ("wait", 1, 1),
+    ]
+
+
+@pytest.mark.parametrize("state", ["active", "completed"])
+def test_corrupt_non_queued_plan_logs_scan_error(spark, tmp_path, state):
+    """FAILFAST covers every state the one scan reads: a corrupt plan
+    file in `active/` or `completed/` halts the cycle as scan_error,
+    like one in `queued/background/`."""
+    root = str(tmp_path / f"comms_corrupt_{state}")
+    _setup_queues(root)
+    with open(os.path.join(root, "beta", state, "zz-corrupt.json"), "w") as f:
         f.write('{"id": "broken", ')  # truncated JSON
     with pytest.raises(Exception):
         dispatch_once(spark, root, NOW)

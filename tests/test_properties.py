@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -287,3 +287,75 @@ def test_skyline_matches_dominance_bruteforce(spark, rows, tmp_path_factory):
         )
     }
     assert got == want, (got, want, rows)
+
+
+_QUEUE_FILES = ["src/auth/session.py", "src/pay/charge.py", "src/core/models.py", "lib/util.py", "docs/guide.md"]
+_QUEUE_TYPES = ["security", "bug", "feature", "refactor", "chore", "docs", "spike"]
+_queue_plan = st.tuples(
+    st.sampled_from(["queued", "active", "completed", "failed"]),
+    st.integers(min_value=0, max_value=3),  # created_at slot (ties)
+    st.sampled_from(_QUEUE_TYPES),
+    st.lists(  # phases, each a file list over a small shared pool
+        st.lists(st.sampled_from(_QUEUE_FILES), min_size=1, max_size=3), min_size=0, max_size=5
+    ),
+)
+
+
+@given(plans=st.lists(_queue_plan, min_size=1, max_size=8))
+@example(
+    plans=[
+        ("completed", 0, "feature", [["src/auth/session.py"], ["lib/util.py"]]),
+        ("active", 1, "bug", [["lib/util.py", "docs/guide.md"]]),
+        ("failed", 1, "refactor", [["src/core/models.py"]]),
+        ("queued", 1, "security", [["src/pay/charge.py"]]),
+        ("queued", 2, "chore", [["docs/guide.md"], ["lib/util.py"], ["docs/guide.md"], ["src/core/models.py"]]),
+        ("queued", 2, "docs", [["src/pay/charge.py"], ["lib/util.py"]]),
+        ("queued", 3, "spike", []),
+    ]
+)
+@_settings
+def test_orbiter_selection_matches_registered_oracles(spark, plans):
+    """best_plan, dep_satisfied and priority_scores equal the DuckDB SQL
+    registered for topk_best_plan, filter_dep_satisfied and
+    project_priority — same body, same plan_files/edges CTEs — run over
+    random queues: every status, created_at ties, shared and critical
+    files, plans with no phase or with 4 or more."""
+    import dataclasses
+    from datetime import datetime
+
+    import duckdb
+    from hypothesis import assume
+
+    from nova_pulsar_spark.plans import scheduler as S
+    from nova_pulsar_spark.plans.fixtures import PHASES, PLANS
+    from nova_pulsar_spark.registry import all_queries
+    from tools.check_oracle import compare
+
+    plan_rows, phase_rows = [], []
+    for i, (status, slot, ptype, phases) in enumerate(plans):
+        pid, project = f"plan-{i:02d}", f"proj{i % 2}"
+        created = datetime(2026, 2, 20 + slot, 9, 0)
+        plan_rows.append(
+            (pid, pid, project, f"/w/{project}", None, ptype, status, "background", created, len(phases), 1)
+        )
+        phase_rows += [(pid, k + 1, f"ph{k + 1}", files, "Low", "sonnet") for k, files in enumerate(phases)]
+    assume(phase_rows)  # a VALUES CTE needs a row
+    gen_plans = dataclasses.replace(PLANS, rows=tuple(plan_rows))
+    gen_phases = dataclasses.replace(PHASES, rows=tuple(phase_rows))
+    plans_df, phases_df = gen_plans.spark_df(spark), gen_phases.spark_df(spark)
+    spark_side = {
+        "topk_best_plan": S.best_plan(plans_df, phases_df),
+        "filter_dep_satisfied": S.dep_satisfied(plans_df, phases_df).select(
+            F.col("id").alias("plan_id"), "project", "type", "created_at"
+        ),
+        "project_priority": S.priority_scores(plans_df, phases_df),
+    }
+    regs = all_queries()
+    con = duckdb.connect()
+    for name, df in spark_side.items():
+        sql = regs[name].sql
+        assert PLANS.values_cte() in sql and PHASES.values_cte() in sql
+        sql = sql.replace(PLANS.values_cte(), gen_plans.values_cte())
+        sql = sql.replace(PHASES.values_cte(), gen_phases.values_cte())
+        problems = compare(df.toPandas(), con.execute(sql).df())
+        assert not problems, (name, problems, plans)
